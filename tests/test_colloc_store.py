@@ -5,6 +5,7 @@ fan-out — the reference's ``collocations.bin`` serving model
 
 from __future__ import annotations
 
+import json
 import time
 
 import pytest
@@ -212,3 +213,15 @@ def test_store_serves_wsdef_catalog_constraints_and_trinary(
     assert want_rows == got_rows and len(got_rows) > 0
     # trinary sub-relations materialized per 3:-slot value
     assert any(r[0].startswith("svia/") for r in got_rows)
+    # a store written before the format key (pre-trinary rows) must
+    # not serve: the request falls back to the live fan-out
+    from word_sketch_lucene_spark.index.colloc_store import (
+        META_NAME,
+        STORE_DIR,
+    )
+
+    meta_p = s.root / STORE_DIR / META_NAME
+    meta = json.loads(meta_p.read_text())
+    del meta["format"]
+    meta_p.write_text(json.dumps(meta))
+    assert not store_can_serve(s, cat)

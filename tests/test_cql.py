@@ -399,6 +399,12 @@ def test_constraint_index_route_identical(spark, toks, index_small,
         s.pattern_hits(pat)
     # the auto router delegates to the distributed compile
     assert set(s.pattern_hits_auto(pat)) == want
+    # a cross-attr `|` routes there too, under any Σcf budget
+    alt = '[word="sp.*"|class="VERB"] [word=".*"]'
+    want_alt = {(r["doc_id"], r["start"], r["end"]) for r in
+                compile_cql(explode_tokens(docs_small), alt,
+                            keep_terms=False).collect()}
+    assert set(s.pattern_hits_auto(alt)) == want_alt and want_alt
 
 
 def test_constraint_within_clause_order(spark):

@@ -59,6 +59,13 @@ def test_index_collocates_match_dataframe(explore_ctx):
     got_o = index_collocates_for_head(s, "table", min_gap=1, max_gap=3,
                                       ordered=True, limit=30, round_dp=4)
     assert got_o == want_o and got_o
+    # an exact 4-dp tie (1/32): the index tier rounds half-up like
+    # Spark's F.round, not half-to-even like Python's round
+    from word_sketch_lucene_spark.query.sketch import _round
+
+    spark_tie = toks.sparkSession.range(1).select(
+        F.round(F.lit(1 / 32), 4)).first()[0]
+    assert _round(1 / 32, 4) == spark_tie == 0.0313
 
 
 def test_index_multiseed_aggregates_match_dataframe(explore_ctx):

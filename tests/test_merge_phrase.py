@@ -47,7 +47,7 @@ def test_decode_inverts_encode(spark, split_corpus, tmp_path):
 
 def test_merged_index_rank_identical_to_full_build(spark, split_corpus, tmp_path):
     """Index(A) ⊔ Index(B) merged must answer like Index(A∪B)."""
-    _, a, b, oracle = split_corpus
+    pages, a, b, oracle = split_corpus
     ra, rb, rm = tmp_path / "a", tmp_path / "b", tmp_path / "m"
     build_index(spark, a, ra, doc_salt=2, n_partitions=4)
     build_index(spark, b, rb, doc_salt=2, n_partitions=4)
@@ -61,6 +61,18 @@ def test_merged_index_rank_identical_to_full_build(spark, split_corpus, tmp_path
         assert [d for d, _ in got] == [d for d, _ in expected], q
         for (d1, s1), (d2, s2) in zip(got, expected):
             assert s1 == pytest.approx(s2, abs=1e-12)
+    # stored metadata merges too: a filtered search equals the oracle
+    # over A ∪ B restricted to the passing docs
+    en = {r["doc_id"] for r in
+          pages.filter("lang = 'en'").select("doc_id").collect()}
+    q = ["t3", "t17"]
+    scored = ((d, oracle.score_doc(q, d)) for d in en)
+    expected = sorted(((d, sc) for d, sc in scored if sc > 0),
+                      key=lambda x: (-x[1], x[0]))[:10]
+    got, _ = s.search(q, k=10, doc_filter="lang = 'en'")
+    assert [d for d, _ in got] == [d for d, _ in expected] and got
+    for (_, s1), (_, s2) in zip(got, expected):
+        assert s1 == pytest.approx(s2, abs=1e-12)
 
 
 def test_merge_is_resumable(spark, split_corpus, tmp_path):

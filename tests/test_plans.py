@@ -252,6 +252,7 @@ def test_extended_fold_identity_with_compile_branches(spark, docs_small,
 *UNIMAP xmod
 \t2:"JJ" [tag="DT"]{0,1} 1:"NN.*"
 \t2:"JJ" [tag="JJ"|word="very"]{0,2} 1:"NN.*"
+\t2:[tag="JJ"|word="very"] [tag="DT"]{0,1} 1:"NN.*"
 
 *DUAL
 =objects of "%w"/verbs with "%w" as object

@@ -94,20 +94,3 @@ def logdice_py(fab: float, fa: float, fb: float) -> float:
 def rel_freq_expr(fab: Column, fa: Column) -> Column:
     """relativeFrequency ``f(AB)/f(A)`` (``LogDiceUtils.java:51-55``)."""
     return F.when(fa <= 0, F.lit(0.0)).otherwise(fab / fa)
-
-
-def mi3_expr(fab: Column, fa: Column, fb: Column, n: Column) -> Column:
-    """MI3 = log2(fab³·N/(fa·fb)) (``README.md:581-607`` uses cubed fab)."""
-    return F.log(F.pow(fab, F.lit(3.0)) * n / (fa * fb)) / F.lit(LN2)
-
-
-def tscore_expr(fab: Column, fa: Column, fb: Column, n: Column) -> Column:
-    """T-score = (fab - E)/sqrt(fab), E = fa·fb/N (``README.md:581-607``)."""
-    e = fa * fb / n
-    return (fab - e) / F.sqrt(fab)
-
-
-def loglik_expr(fab: Column, fa: Column, fb: Column, n: Column) -> Column:
-    """Simplified G² = 2·fab·ln(fab/E), E = fa·fb/N (``README.md:581-607``)."""
-    e = fa * fb / n
-    return F.lit(2.0) * fab * F.log(fab / e)

@@ -26,11 +26,3 @@ def detokenize_expr(col: Column) -> Column:
     c = F.regexp_replace(col, r"\s+([.,;:!?%)\]}])", r"$1")
     c = F.regexp_replace(c, r"([(\[{])\s+", r"$1")
     return c
-
-
-def trim_to_sentence_expr(col: Column) -> Column:
-    """F4 plain-text variant: keep text after the last ``[.!?] +
-    capital`` on the left and up to the first sentence end on the right
-    (``BlackLabSnippetParser.java:84-215``)."""
-    left = F.regexp_replace(col, r"^.*[.!?]\s+(?=[A-Z])", "")
-    return F.regexp_extract(left, r"^(.*?[.!?])(?:\s|$).*$|^(.*)$", 0)

@@ -91,20 +91,6 @@ def _adaptive_parts(spark: SparkSession, requested: int,
     return max(1, min(requested, max(_cluster_width(spark), want)))
 
 
-def build_postings(tokens: DataFrame) -> DataFrame:
-    """Exploded tokens → ``(term, doc_id, tf, positions)`` (logical view).
-
-    ``sort_array(collect_list(pos))`` restores ascending positions
-    regardless of shuffle arrival order. The segment kernel does this
-    aggregation itself from sorted rows; this DataFrame form exists for
-    the API/oracle surface.
-    """
-    return tokens.groupBy("term", "doc_id").agg(
-        F.count("*").alias("tf"),
-        F.sort_array(F.collect_list("pos")).alias("positions"),
-    )
-
-
 class IndexPaths:
     """Directory layout of one index build."""
 

@@ -34,15 +34,30 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.cql import DEFAULT_LAYERS, parse_cql
+from ..plans.cql import (
+    DEFAULT_LAYERS,
+    TokenItem,
+    compile_cql,
+    item_tests,
+    layer_column,
+    layer_resolver,
+    parse_cql,
+    strip_constraints,
+)
 from ..plans.relations import (
     GrammarCatalog,
+    _two_slot_arm,
+    _two_slot_shape,
     pattern_pos_group,
     score_ranked_collocates,
 )
 
 STORE_DIR = "colloc_store"
 META_NAME = "_store_meta.json"
+# stored row layout version, recorded in the meta: 2 = trinary relations
+# stored per 3:-slot value as `<id>/<value>` rows. A store written by an
+# older layout (no key) rebuilds instead of serving merged counts.
+STORE_FORMAT = 2
 
 
 def _store_rels(catalog: GrammarCatalog,
@@ -85,12 +100,11 @@ def build_collocation_store(
     head over the index's own forward store. Idempotent per config
     (meta file records the catalog patterns + attrs; a changed catalog
     rebuilds). Returns the store path."""
-    from ..plans.cql import compile_cql, effective_test
-
     rels = _store_rels(catalog, relation_types)
     if not rels:
         raise ValueError("no pattern relations to materialize")
     meta = {
+        "format": STORE_FORMAT,
         "relations": sorted(
             (r.id, r.pattern, r.type, r.head_position, r.colloc_position,
              bool(r.dual), r.default_slop) for r in rels),
@@ -105,6 +119,8 @@ def build_collocation_store(
     }
     out = Path(searcher.root) / STORE_DIR
     meta_path = out / META_NAME
+    # an identical meta (same format, catalog, layers and index
+    # lineage) means the store on disk is current
     if meta_path.exists():
         try:
             if json.loads(meta_path.read_text()) == json.loads(
@@ -117,29 +133,17 @@ def build_collocation_store(
     need = {"term", DEFAULT_LAYERS[subst_attr], DEFAULT_LAYERS[colloc_attr]}
     if within_sentence:
         need.add("sent_no")
-    from ..plans.cql import strip_constraints
-
-    def _need_attr(a: str) -> None:
-        need.add("term" if a == "class" else DEFAULT_LAYERS.get(a, a))
-
     for rel in rels:
         core, cons = strip_constraints(rel.pattern)
-        for c in cons:
-            _need_attr(c.attr_a)
-            _need_attr(c.attr_b)
-        for it in parse_cql(core):
-            for t in getattr(it, "tests", ()):
-                _need_attr(effective_test(t).attr)
-            for group in getattr(it, "alts", None) or ():
-                for t in group:
-                    _need_attr(effective_test(t).attr)
+        need.update(layer_column(a) for c in cons
+                    for a in (c.attr_a, c.attr_b))
+        need.update(layer_column(t.attr) for it in parse_cql(core)
+                    if isinstance(it, TokenItem) for t in item_tests(it))
     tokens = searcher.forward_token_table(columns=need)
     if tokens is None or DEFAULT_LAYERS[subst_attr] not in tokens.columns:
         raise NotImplementedError(
             "collocation store needs the forward_layers store — build "
             "with index.build.build_conllu_index(store_docstore=True)")
-    from ..plans.relations import _side_pred, _two_slot_shape
-
     spark = searcher.spark
     nparts = n_partitions or spark.sparkContext.defaultParallelism
     # every relation branch re-reads the token table — materialize the
@@ -168,17 +172,10 @@ def build_collocation_store(
                 & (g >= -maxw) & (g <= maxw) & (g != 0))
         if within_sentence:
             cond = cond & (F.col("h.sent_no") == F.col("c.sent_no"))
-        whens = []
-        for rel, (hitem, citem, lo, hi, head_first, dual) in fast:
-            if dual:
-                arm = F.abs(g).between(1, hi)
-            elif head_first:
-                arm = g.between(lo, hi)
-            else:
-                arm = (-g).between(lo, hi)
-            arm = arm & _side_pred(hitem, "h", cols) \
-                & _side_pred(citem, "c", cols)
-            whens.append(F.when(arm, F.lit(rel.id)))
+        on_h = layer_resolver(cols, lambda col: f"h.{col}")
+        on_c = layer_resolver(cols, lambda col: f"c.{col}")
+        whens = [F.when(_two_slot_arm(g, shape, on_h, on_c), F.lit(rel.id))
+                 for rel, shape in fast]
         hterm = DEFAULT_LAYERS.get(subst_attr, subst_attr)
         cterm = DEFAULT_LAYERS.get(colloc_attr, colloc_attr)
         parts.append(
@@ -255,8 +252,6 @@ def store_meta(searcher) -> dict | None:
 def _rel_has_third(rel) -> bool:
     """True when the pattern labels a 3: slot — its captured value
     parameterizes the stored relation id (``<id>/<value>``)."""
-    from ..plans.cql import TokenItem, strip_constraints
-
     core, _ = strip_constraints(rel.pattern)
     try:
         return any(isinstance(it, TokenItem) and it.label == "3"
@@ -288,6 +283,7 @@ def store_can_serve(searcher, catalog: GrammarCatalog,
     back to the live fan-out, never serve stale counts)."""
     meta = store_meta(searcher)
     if (meta is None
+            or meta.get("format") != STORE_FORMAT
             or meta["subst_attr"] != subst_attr
             or meta["colloc_attr"] != colloc_attr
             or bool(meta["within_sentence"]) != bool(within_sentence)):

@@ -81,8 +81,9 @@ def merge_indexes(
     n_partitions: int | None = None,
     block_size: int = BLOCK_SIZE,
 ) -> dict:
-    """Merge N built indexes into one compacted index (docstores and
-    stats folded too). Resumable via the output manifest."""
+    """Merge N built indexes into one compacted index (stats and every
+    per-doc store — docstore, doc_meta, forward layers, names — folded
+    too). Resumable via the output manifest."""
     paths = IndexPaths(out_root)
     paths.root.mkdir(parents=True, exist_ok=True)
     nparts = n_partitions or spark.sparkContext.defaultParallelism
@@ -143,15 +144,6 @@ def merge_indexes(
         F.sum("n").alias("df"), F.sum("sum_tf").alias("cf")
     ).write.mode("overwrite").parquet(str(paths.term_stats))
 
-    stores = [str(Path(r) / "docstore") for r in in_roots
-              if (Path(r) / "docstore").exists()]
-    if stores:
-        ds = None
-        for s in stores:
-            d = spark.read.parquet(s)
-            ds = d if ds is None else ds.unionByName(d)
-        ds.write.mode("overwrite").parquet(str(paths.docstore))
-
     # annotation-layer postings merge the same way as the term segments
     # (the prefixed key IS the term for the writer kernel); layer_stats
     # re-derives from merged block metadata
@@ -175,9 +167,10 @@ def merge_indexes(
         )
         write_layer_stats(spark, paths.layers, paths.layer_stats)
 
-    # per-doc auxiliary stores fold by disjoint union (doc ids must not
-    # collide across inputs — the add_documents contract)
-    for aux in ("forward_layers", "doc_names"):
+    # per-doc stores (texts, stored metadata fields, forward layers,
+    # names) fold by disjoint union (doc ids must not collide across
+    # inputs — the add_documents contract)
+    for aux in ("docstore", "doc_meta", "forward_layers", "doc_names"):
         dirs = [str(Path(r) / aux) for r in in_roots
                 if (Path(r) / aux).exists()]
         if dirs:

@@ -261,36 +261,6 @@ def _shingle_hashes_py(text: str, n: int) -> np.ndarray:
     return vals
 
 
-def make_minhash_udf(num_hashes: int = 64, shingle_n: int = 3, seed: int = 7):
-    """Arrow-vectorized MinHash signature UDF: text → array<long> — the
-    self-contained variant for STREAMING rows (no shingle table in
-    scope; batch dedup uses :func:`minhash_signatures` over the shared
-    shingle table instead).
-
-    Permutations are affine maps ``(aᵢ·h + bᵢ) mod 2⁶¹-1`` with
-    deterministic aᵢ, bᵢ from splitmix64(seed, i).
-    """
-    idx = np.arange(num_hashes, dtype=np.uint64)
-    a = (_splitmix64((np.uint64(seed) << np.uint64(32)) ^ idx) | np.uint64(1))
-    bcoef = _splitmix64((np.uint64(seed + 1) << np.uint64(32)) ^ idx)
-    MERS = np.uint64((1 << 61) - 1)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def minhash(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            hs = _shingle_hashes_py(t or "", shingle_n)
-            if hs.size == 0:
-                out.append([0] * num_hashes)
-                continue
-            # (num_hashes, n_shingles) affine transforms, min over shingles
-            m = (a[:, None] * hs[None, :] + bcoef[:, None]) % MERS
-            out.append(m.min(axis=1).astype(np.int64).tolist())
-        return pd.Series(out)
-
-    return minhash
-
-
 def _per_doc_signature_df(shingle_hashes: DataFrame, emit, schema: str,
                           n_partitions: int | None = None,
                           doc_local: bool = False) -> DataFrame:

@@ -19,10 +19,11 @@ real parse table would be queried.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scoring import logdice_expr
+from ..plans.cql import item_predicate, layer_resolver, parse_relation_query
 from ..plans.relations import word_class_expr
 
 SENT_LEN = 20  # pseudo-sentence length of the stub annotator
@@ -182,34 +183,19 @@ def dependency_pairs(annotated: DataFrame) -> DataFrame:
              "dep_term", "dep_wclass", "deprel")
 
 
-def _parsed_layer_col(attr: str) -> Column:
-    """Attribute → column over the PARSED CoNLL-U schema
-    (``sources/conllu.py``), mirroring ``sources.conllu.layer_tokens``'s
-    layer normalization (word/lemma lowercased; ``*_cs`` preserved)."""
-    exprs = {
-        "word": F.lower(F.col("word")), "term": F.lower(F.col("word")),
-        "lemma": F.lower(F.col("lemma")),
-        "word_cs": F.col("word"), "lemma_cs": F.col("lemma"),
-        "upos": F.col("upos"), "pos": F.col("upos"),
-        "xpos": F.col("xpos"), "tag": F.col("xpos"),
-        "deprel": F.col("deprel"), "feats": F.col("feats"),
-    }
-    if attr not in exprs:
-        raise ValueError(f"relation-query attribute {attr!r} not in the "
-                         f"CoNLL-U schema (available: {sorted(exprs)})")
-    return exprs[attr]
-
-
-def _item_pred_parsed(item) -> Column:
-    """Conjunction of one relation operand's tests over the parsed
-    schema (sensitivity flags routed like ``plans.cql``)."""
-    from ..plans.cql import _test_col, effective_test
-
-    pred = F.lit(True)
-    for t in item.tests:
-        t = effective_test(t)
-        pred = pred & _test_col(t, _parsed_layer_col(t.attr))
-    return pred
+def _parsed_layers(parsed: DataFrame) -> DataFrame:
+    """The PARSED CoNLL-U schema (``sources/conllu.py``) under the
+    token-table layer names, normalized like
+    ``sources.conllu.layer_tokens`` (word/lemma lowercased; ``*_cs``
+    preserved), so relation operands compile through
+    ``plans.cql.item_predicate``."""
+    return parsed.select(
+        "doc_id", "sent_id", "token_id", "head",
+        F.lower(F.col("word")).alias("term"),
+        F.lower(F.col("lemma")).alias("lemma"),
+        F.col("word").alias("word_cs"), F.col("lemma").alias("lemma_cs"),
+        "upos", "xpos", "deprel",
+        *[c for c in ("feats",) if c in parsed.columns])
 
 
 def relation_query_pairs(parsed: DataFrame, query) -> DataFrame:
@@ -224,22 +210,22 @@ def relation_query_pairs(parsed: DataFrame, query) -> DataFrame:
     deprel)`` — terms are lemma-layer (lowercased), the grouping
     identity the reference extracts from hit groups.
     """
-    from ..plans.cql import parse_relation_query
-
     rq = parse_relation_query(query) if isinstance(query, str) else query
     if rq is None:
         raise ValueError(f"not a relation query: {query!r}")
-    gov = parsed.filter(_item_pred_parsed(rq.source)).select(
+    layers = _parsed_layers(parsed)
+    resolve = layer_resolver(layers.columns)
+    gov = layers.filter(item_predicate(rq.source, resolve)).select(
         F.col("doc_id").alias("doc_id_h"),
         F.col("sent_id").alias("sent_id_h"),
         F.col("token_id").alias("gov_id"),
-        F.lower(F.col("lemma")).alias("head_term"))
-    dep = parsed.filter(
+        F.col("lemma").alias("head_term"))
+    dep = layers.filter(
         (F.col("head") > 0) & (F.col("deprel") == rq.deprel)
-        & _item_pred_parsed(rq.target)
+        & item_predicate(rq.target, resolve)
     ).select("doc_id", "sent_id", F.col("head").alias("gov_join"),
              F.col("token_id").alias("dep_id"),
-             F.lower(F.col("lemma")).alias("dep_term"), "deprel")
+             F.col("lemma").alias("dep_term"), "deprel")
     return dep.join(
         gov,
         (dep["doc_id"] == gov["doc_id_h"])
@@ -263,8 +249,6 @@ def relation_query_collocates(
     :func:`dependency_sketch` for the same (lemma, deprel)
     (``queryAndRankDepCollocates``). The head lemma for f(A) comes from
     the source operand's positive lemma/word literal."""
-    from ..plans.cql import parse_relation_query
-
     rq = parse_relation_query(query) if isinstance(query, str) else query
     if rq is None:
         raise ValueError(f"not a relation query: {query!r}")

@@ -1302,7 +1302,7 @@ def _cql_item_sql(item, alias: str,
     """One token item's full condition list: conjunctive tests plus,
     when the item carries a cross-attr ``|`` disjunction, one
     parenthesized OR-of-conjunctions (the SQL twin of
-    ``plans.cql._item_predicate``)."""
+    ``plans.cql.item_predicate``)."""
     conds = [_cql_test_sql(t, alias, layers) for t in item.tests]
     if item.alts:
         branches = [

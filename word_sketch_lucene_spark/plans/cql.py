@@ -32,6 +32,7 @@ columns when present — the CoNLL-U multi-layer schema of
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, Window
@@ -498,19 +499,42 @@ def effective_test(test: AttrTest) -> AttrTest:
     return test
 
 
-def _resolve_col(attr: str, columns: list[str]) -> Column:
-    if attr == "class":
-        # virtual layer: deterministic word class of the surface term
-        # (the synthetic xpos analog; a real deployment has xpos columns)
-        from .relations import word_class_expr
+def layer_column(attr: str) -> str:
+    """The token-table column a test attribute reads — the virtual
+    ``class`` layer derives from the surface term."""
+    return "term" if attr == "class" else DEFAULT_LAYERS.get(attr, attr)
 
-        return word_class_expr("term")
-    col = DEFAULT_LAYERS.get(attr, attr)
-    if col not in columns:
-        raise ValueError(
-            f"pattern attribute {attr!r} → column {col!r} not in token "
-            f"table (available: {sorted(columns)})")
-    return F.col(col)
+
+def item_tests(item: TokenItem) -> list[AttrTest]:
+    """Every test of one item, ``|`` branches included, with the
+    sensitivity flag resolved (:func:`effective_test`)."""
+    return [effective_test(t)
+            for t in [*item.tests, *(t for g in item.alts or () for t in g)]]
+
+
+def layer_resolver(columns: list[str],
+                   name: Callable[[str], str] = lambda col: col
+                   ) -> Callable[[str], Column]:
+    """``attr → Column`` over a token table with layer columns
+    ``columns``. ``name`` maps a layer column to its name in the plan
+    at hand — an alias prefix (``h.term``), a pivoted neighbour
+    (``_nb_p1_xpos``), a renamed projection — the one thing that
+    differs between the plans that test token items."""
+    def resolve(attr: str) -> Column:
+        if attr == "class":
+            # virtual layer: deterministic word class of the surface
+            # term (the synthetic xpos analog)
+            from .relations import word_class_expr
+
+            return word_class_expr(name("term"))
+        col = DEFAULT_LAYERS.get(attr, attr)
+        if col not in columns:
+            raise ValueError(
+                f"pattern attribute {attr!r} → column {col!r} not in "
+                f"token table (available: {sorted(columns)})")
+        return F.col(name(col))
+
+    return resolve
 
 
 # annotation layers where "_" is CoNLL-U's explicit NO-ANNOTATION
@@ -532,21 +556,39 @@ def _test_col(test: AttrTest, col: Column) -> Column:
     return ~c if test.negated else c
 
 
-def _item_predicate(item: TokenItem, columns: list[str]) -> Column:
-    pred = F.lit(True)
-    for t in item.tests:
-        t = effective_test(t)
-        pred = pred & _test_col(t, _resolve_col(t.attr, columns))
+def item_predicate(item: TokenItem,
+                   resolve: Callable[[str], Column]) -> Column:
+    """One token item as ONE predicate: the conjunction of its tests
+    AND the OR of its ``|`` branches, each test with its sensitivity
+    flag resolved and the ``_`` no-annotation rule applied. Every plan
+    that tests a token slot builds its predicate here; ``resolve``
+    (:func:`layer_resolver`) says where the layer columns live."""
+    def conj(tests: list[AttrTest]) -> Column:
+        pred = F.lit(True)
+        for t in tests:
+            t = effective_test(t)
+            pred = pred & _test_col(t, resolve(t.attr))
+        return pred
+
+    pred = conj(item.tests)
     if item.alts:
         alt = F.lit(False)
         for group in item.alts:
-            g = F.lit(True)
-            for t in group:
-                t = effective_test(t)
-                g = g & _test_col(t, _resolve_col(t.attr, columns))
-            alt = alt | g
+            alt = alt | conj(group)
         pred = pred & alt
     return pred
+
+
+def _selective(item: TokenItem, selective_broadcast: bool) -> bool:
+    """A positive literal surface/lemma test bounds the slot by one
+    form's cf — the broadcast-safe side of a positional join. An ``|``
+    disjunction is NEVER selective: a literal in one branch does not
+    bound the whole OR."""
+    return selective_broadcast and not item.alts and any(
+        t.is_literal and not t.negated
+        and DEFAULT_LAYERS.get(effective_test(t).attr)
+        in ("term", "lemma", "word_cs", "lemma_cs")
+        for t in item.tests)
 
 
 def has_alts(items: list[TokenItem | GapItem]) -> bool:
@@ -658,6 +700,7 @@ def compile_cql(
         return out.distinct() if distinct else out
     steps = _steps(items)
     cols = tokens.columns
+    resolve = layer_resolver(cols)
     if within_sentence and "sent_no" not in cols:
         raise ValueError("within_sentence=True needs a sent_no column "
                          "(sources.conllu.layer_tokens emits it)")
@@ -670,22 +713,11 @@ def compile_cql(
             sel.append(F.col("term").alias(f"t{i}"))
         if item.label is not None:
             for a in capture_attrs:
-                sel.append(_resolve_col(a, cols).alias(f"x_{a}_{i}"))
-        return tokens.filter(_item_predicate(item, cols)).select(*sel)
-
-    def _selective(item: TokenItem) -> bool:
-        # a positive literal surface/lemma test bounds the slot by one
-        # form's cf — the broadcast-safe side of every positional join.
-        # An `|` disjunction is NEVER selective: a literal in one
-        # branch does not bound the whole OR.
-        return selective_broadcast and not item.alts and any(
-            t.is_literal and not t.negated
-            and DEFAULT_LAYERS.get(effective_test(t).attr)
-            in ("term", "lemma", "word_cs", "lemma_cs")
-            for t in item.tests)
+                sel.append(resolve(a).alias(f"x_{a}_{i}"))
+        return tokens.filter(item_predicate(item, resolve)).select(*sel)
 
     cur = _side(0, steps[0].item)
-    chain_selective = _selective(steps[0].item)
+    chain_selective = _selective(steps[0].item, selective_broadcast)
     for i, st in enumerate(steps[1:], start=1):
         nxt = _side(i, st.item)
         prev_p = F.col(f"p{i - 1}")
@@ -702,7 +734,7 @@ def compile_cql(
             # the chained result is bounded by the earlier selective
             # slot (× window width) — keep it the broadcast side
             cur = F.broadcast(cur).join(nxt, cond)
-        elif _selective(st.item):
+        elif _selective(st.item, selective_broadcast):
             cur = cur.join(F.broadcast(nxt), cond)
             chain_selective = True
         else:
@@ -819,8 +851,8 @@ def _compile_dp(
     the final ``end`` enumerates ``sequence(_elo,_ehi)``. Output is
     row-identical to variant expansion (pinned by the pytest
     identity suite)."""
-    cols = tokens.columns
-    if within_sentence and "sent_no" not in cols:
+    resolve = layer_resolver(tokens.columns)
+    if within_sentence and "sent_no" not in tokens.columns:
         raise ValueError("within_sentence=True needs a sent_no column "
                          "(sources.conllu.layer_tokens emits it)")
     token_items = [it for it in items if isinstance(it, TokenItem)]
@@ -854,9 +886,9 @@ def _compile_dp(
                 sel.append(F.col("term").alias(f"_t{j}"))
                 cap_cols.append((f"term_{it.label}", f"_t{j}"))
             for a in capture_attrs:
-                sel.append(_resolve_col(a, cols).alias(f"_x{a}{j}"))
+                sel.append(resolve(a).alias(f"_x{a}{j}"))
                 cap_cols.append((f"{a}_{it.label}", f"_x{a}{j}"))
-        side = tokens.filter(_item_predicate(it, cols)).select(*sel)
+        side = tokens.filter(item_predicate(it, resolve)).select(*sel)
         p = F.col(f"_p{j}")
         if cur is None:
             out = side.select(
@@ -872,7 +904,7 @@ def _compile_dp(
             if within_sentence:
                 cond = cond & (F.col(f"_s{j}") == F.col("_sent"))
             joined = (cur.join(F.broadcast(side), cond)
-                      if _dp_selective(it, selective_broadcast)
+                      if _selective(it, selective_broadcast)
                       else cur.join(side, cond))
             out = joined.select(
                 "doc_id", "start", p.alias("_elo"), p.alias("_ehi"),
@@ -891,7 +923,7 @@ def _compile_dp(
         j = counter[0]
         lo_ = max(it.rep_min, 1)
         hi = it.rep_max
-        m = tokens.filter(_item_predicate(it, cols)).select(
+        m = tokens.filter(item_predicate(it, resolve)).select(
             F.col("doc_id").alias(f"_d{j}"),
             F.col("pos").alias(f"_p{j}"),
             *([F.col("sent_no").alias(f"_s{j}")]
@@ -943,14 +975,6 @@ def _compile_dp(
                        if capture_sent else []),
                      *state_caps)
     return out.distinct() if distinct else out
-
-
-def _dp_selective(item: TokenItem, selective_broadcast: bool) -> bool:
-    return selective_broadcast and not item.alts and any(
-        t.is_literal and not t.negated
-        and DEFAULT_LAYERS.get(effective_test(t).attr)
-        in ("term", "lemma", "word_cs", "lemma_cs")
-        for t in item.tests)
 
 
 def sentence_spans_containing(tokens: DataFrame,

@@ -23,6 +23,25 @@ from pathlib import Path
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .cql import (
+    DEFAULT_LAYERS,
+    GapItem,
+    TokenItem,
+    _steps,
+    compile_cql,
+    effective_test,
+    has_alts,
+    has_repetitions,
+    item_predicate,
+    item_tests,
+    layer_column,
+    layer_resolver,
+    parse_cql,
+    pattern_collocates,
+    strip_constraints,
+    substitute_at_position,
+)
+
 DEFAULT_CATALOG = Path(__file__).resolve().parents[2] / "grammars" / "relations.json"
 # full port of the reference's 69-relation English catalog
 # (reference grammars/relations.json:1-553): BCQL patterns over
@@ -198,8 +217,6 @@ class GrammarCatalog:
         carry a ``deprel=`` test (the reference's ``deriveDeprel``),
         which also fills the relation's ``deprel`` field for routing.
         """
-        from .cql import TokenItem, parse_cql
-
         rid = obj["id"]
         items = parse_cql(obj["pattern"])
         token_items = [it for it in items if isinstance(it, TokenItem)]
@@ -241,8 +258,6 @@ def pattern_pos_group(rel: RelationConfig, position: int | None = None) -> str:
     position) — mirror of the reference's
     ``RelationUtils.computeHeadPosGroup`` (xpos prefix → group), used to
     select which relations apply to a NOUN/VERB/ADJ-headed sketch."""
-    from .cql import TokenItem, parse_cql, strip_constraints
-
     if not rel.pattern:
         return rel.head_class or "OTHER"
     items = [it for it in parse_cql(strip_constraints(rel.pattern)[0])
@@ -296,16 +311,6 @@ def word_sketch_patterns(
 
     from ..caching import persist_tracked
     from ..functions.scoring import logdice_expr, rel_freq_expr
-    from .cql import (
-        TokenItem,
-        _item_predicate,
-        _resolve_col,
-        compile_cql,
-        parse_cql,
-        strip_constraints,
-        substitute_at_position,
-    )
-
     rels = [r for r in catalog.relations
             if r.pattern and r.type in relation_types]
     if head_pos is not None:
@@ -428,15 +433,6 @@ def _two_slot_shape(rel: RelationConfig):
     from the first), or a ``dual`` one-constraint window relation.
     ``None`` → the relation keeps its own join branch (3+ slots,
     repetition quantifiers)."""
-    from .cql import (
-        TokenItem,
-        _steps,
-        has_alts,
-        has_repetitions,
-        parse_cql,
-        strip_constraints,
-    )
-
     core, cons = strip_constraints(rel.pattern)
     items = parse_cql(core)
     if has_repetitions(items) or has_alts(items) or cons:
@@ -490,8 +486,6 @@ def _extended_fold_shape(rel: RelationConfig, max_arms: int = 24,
     count over the cap, constraints referencing 3:): the caller falls
     back to the per-relation compile."""
     from itertools import product
-
-    from .cql import GapItem, TokenItem, parse_cql, strip_constraints
 
     core, cons = strip_constraints(rel.pattern)
     try:
@@ -561,98 +555,35 @@ def _nb_name(delta: int, col: str) -> str:
     return f"_nb_{sign}{abs(delta)}_{col}"
 
 
-def _nb_test_col(attr: str, delta: int, cols: list[str]) -> Column:
-    """Resolve one test attribute against the Δ-offset neighbor
-    column (the ``_resolve_col`` twin for pivoted neighbors)."""
-    from .cql import DEFAULT_LAYERS
-
-    if attr == "class":
-        return word_class_expr(_nb_name(delta, "term"))
-    name = DEFAULT_LAYERS.get(attr, attr)
-    if name not in cols:
-        raise ValueError(
-            f"pattern attribute {attr!r} → column {name!r} not in "
-            f"token table (available: {sorted(cols)})")
-    return F.col(_nb_name(delta, name))
-
-
-def _nb_pred(item, delta: int, cols: list[str]) -> Column:
-    """One mid item's tests over the Δ-offset neighbor columns — the
-    :func:`_side_pred` twin for intermediate positions. A missing
-    neighbor (doc edge) is NULL, so every arm referencing it
-    evaluates NULL and the CASE never fires — matching the join
-    chain, where a non-existent position can't match."""
-    from .cql import _test_col, effective_test
-
-    pred = F.lit(True)
-    for t in item.tests:
-        t = effective_test(t)
-        pred = pred & _test_col(t, _nb_test_col(t.attr, delta, cols))
-    if item.alts:
-        alt = F.lit(False)
-        for group in item.alts:
-            g = F.lit(True)
-            for t in group:
-                t = effective_test(t)
-                g = g & _test_col(t, _nb_test_col(t.attr, delta, cols))
-            alt = alt | g
-        pred = pred & alt
-    # a negated-only test must still require the position to EXIST
-    # (the chain joins the mid token; no token → no match): anchor on
-    # the neighbor's surface term being present
-    pred = pred & F.col(_nb_name(delta, "term")).isNotNull()
-    return pred
-
-
-def _ext_need_neighbors(extended, colloc_attr: str,
-                        cols: list[str]) -> dict[int, set[str]]:
+def _ext_need_neighbors(extended, colloc_attr: str) -> dict[int, set[str]]:
     """delta → token-table columns the extended arms read at that
-    offset (mid tests + trinary capture layer)."""
-    from .cql import DEFAULT_LAYERS, effective_test
-
+    offset (mid tests + trinary capture layer; ``term`` always, the
+    existence anchor of :func:`_fast_window_pairs`)."""
     need: dict[int, set[str]] = {}
-
-    def _add(delta: int, attr: str) -> None:
-        name = "term" if attr == "class" else DEFAULT_LAYERS.get(attr, attr)
-        need.setdefault(delta, set()).add(name)
-        # existence anchor (see _nb_pred)
-        need.setdefault(delta, set()).add("term")
-
     for _rel, ext in extended:
         for _g, variants in ext.arms:
             for mid_tests, third in variants:
                 for delta, item in mid_tests:
-                    for t in item.tests:
-                        _add(delta, effective_test(t).attr)
-                    for group in item.alts or ():
-                        for t in group:
-                            _add(delta, effective_test(t).attr)
-                    if not item.tests and not item.alts:
-                        _add(delta, "word")  # existence anchor only
+                    need.setdefault(delta, {"term"}).update(
+                        layer_column(t.attr) for t in item_tests(item))
                 if third is not None:
-                    _add(third, colloc_attr or "word")
+                    need.setdefault(third, {"term"}).add(
+                        layer_column(colloc_attr or "word"))
     return need
 
 
-def _side_pred(item, pref: str, cols: list[str]):
-    """Conjunction of one item's tests over ``{pref}``-aliased columns
-    (the CASE-arm twin of ``plans.cql._item_predicate``)."""
-    from .cql import DEFAULT_LAYERS, _test_col, effective_test
-
-    pred = F.lit(True)
-    for t in item.tests:
-        t = effective_test(t)
-        if t.attr == "class":
-            col = word_class_expr(f"{pref}.term")
-        else:
-            name = DEFAULT_LAYERS.get(t.attr, t.attr)
-            if name not in cols:
-                raise ValueError(
-                    f"pattern attribute {t.attr!r} → column {name!r} "
-                    f"not in token table (available: {sorted(cols)})")
-            col = F.col(f"{pref}.{name}")
-        pred = pred & _test_col(t, col)
-    return pred
+def _two_slot_arm(g: Column, shape, on_h, on_c) -> Column:
+    """The CASE arm of one :func:`_two_slot_shape` relation over a
+    head(``h``)/collocate(``c``) window-join row at signed offset
+    ``g``; ``on_h``/``on_c`` resolve layers on either side."""
+    hitem, citem, lo, hi, head_first, dual = shape
+    if dual:
+        arm = F.abs(g).between(1, hi)
+    elif head_first:
+        arm = g.between(lo, hi)
+    else:
+        arm = (-g).between(lo, hi)
+    return arm & item_predicate(hitem, on_h) & item_predicate(citem, on_c)
 
 
 def _fast_window_pairs(tokens, fast, head, subst_attr, colloc_attr,
@@ -669,14 +600,11 @@ def _fast_window_pairs(tokens, fast, head, subst_attr, colloc_attr,
     join (probe pass over the token table, aggregate bounded by the
     head's cf), so each arm is still a pure predicate — no extra join
     branches, no per-relation Catalyst trees."""
-    from .cql import DEFAULT_LAYERS, _resolve_col
-
     his = [hi for _r, (_h, _c, _lo, hi, _hf, _d) in fast]
     his += [abs(g) for _r, ext in extended for g, _v in ext.arms]
     maxw = max(his)
-    h = tokens.filter(_resolve_col(subst_attr, cols) == head)
-    need_nb = _ext_need_neighbors(extended, colloc_attr, cols) \
-        if extended else {}
+    h = tokens.filter(layer_resolver(cols)(subst_attr) == head)
+    need_nb = _ext_need_neighbors(extended, colloc_attr) if extended else {}
     if need_nb:
         # one broadcast probe + a head-cf-bounded pivot: every (Δ,
         # layer) the arms read becomes a column of the head side.
@@ -700,54 +628,54 @@ def _fast_window_pairs(tokens, fast, head, subst_attr, colloc_attr,
         h = joined.groupBy(*[F.col(c_) for c_ in cols]).agg(*aggs)
     h = h.alias("h")
     c = tokens.alias("c")
+    on_h = layer_resolver(cols, lambda col: f"h.{col}")
+    on_c = layer_resolver(cols, lambda col: f"c.{col}")
     g = F.col("c.pos") - F.col("h.pos")
     cond = ((F.col("h.doc_id") == F.col("c.doc_id"))
             & (g >= -maxw) & (g <= maxw) & (g != 0))
     if within_sentence:
         cond = cond & (F.col("h.sent_no") == F.col("c.sent_no"))
-    whens = []
-    for rel, (hitem, citem, lo, hi, head_first, dual) in fast:
-        if dual:
-            arm = F.abs(g).between(1, hi)
-        elif head_first:
-            arm = g.between(lo, hi)
-        else:
-            arm = (-g).between(lo, hi)
-        arm = arm & _side_pred(hitem, "h", cols) \
-            & _side_pred(citem, "c", cols)
-        whens.append(F.when(arm, F.lit(rel.id)))
+
+    def mid_pred(mid_tests) -> Column:
+        # intermediate tokens test the head side's pivoted Δ-neighbor
+        # columns. A missing neighbor (doc edge) is NULL, and a
+        # negated-only test must still require the position to EXIST
+        # (the chain joins the mid token): anchor on its surface term
+        pred = F.lit(True)
+        for d, item in mid_tests:
+            on_nb = layer_resolver(cols, lambda col, d=d: _nb_name(d, col))
+            pred = pred & item_predicate(item, on_nb) \
+                & F.col(_nb_name(d, "term")).isNotNull()
+        return pred
+
+    cterm = DEFAULT_LAYERS.get(colloc_attr or "word",
+                               colloc_attr or "word")
+    whens = [F.when(_two_slot_arm(g, shape, on_h, on_c), F.lit(rel.id))
+             for rel, shape in fast]
     for rel, ext in extended:
-        base = _side_pred(ext.head_item, "h", cols) \
-            & _side_pred(ext.colloc_item, "c", cols)
+        base = item_predicate(ext.head_item, on_h) \
+            & item_predicate(ext.colloc_item, on_c)
         for con in ext.cons:
-            ca = _ext_con_col(con.attr_a, con.label_a, cols)
-            cb = _ext_con_col(con.attr_b, con.label_b, cols)
+            ca = (on_h if con.label_a == "1" else on_c)(con.attr_a)
+            cb = (on_h if con.label_b == "1" else on_c)(con.attr_b)
             base = base & (ca != cb if con.negated else ca == cb)
         for g0, variants in ext.arms:
             plain = [v for v in variants if v[1] is None]
             if plain:
                 mid_or = F.lit(False)
                 for mid_tests, _third in plain:
-                    v_pred = F.lit(True)
-                    for d, item in mid_tests:
-                        v_pred = v_pred & _nb_pred(item, d, cols)
-                    mid_or = mid_or | v_pred
+                    mid_or = mid_or | mid_pred(mid_tests)
                 whens.append(F.when((g == g0) & base & mid_or,
                                     F.lit(rel.id)))
             for mid_tests, third in variants:
                 if third is None:
                     continue
-                v_pred = (g == g0) & base
-                for d, item in mid_tests:
-                    v_pred = v_pred & _nb_pred(item, d, cols)
                 # trinary: the 3: slot's captured layer parameterizes
                 # the relation id (Sketch-Engine `%(3.lemma)`)
-                tl = DEFAULT_LAYERS.get(colloc_attr or "word",
-                                        colloc_attr or "word")
-                whens.append(F.when(v_pred, F.concat_ws(
-                    "/", F.lit(rel.id), F.col(_nb_name(third, tl)))))
-    cterm = DEFAULT_LAYERS.get(colloc_attr or "word",
-                               colloc_attr or "word")
+                whens.append(F.when(
+                    (g == g0) & base & mid_pred(mid_tests),
+                    F.concat_ws("/", F.lit(rel.id),
+                                F.col(_nb_name(third, cterm)))))
     return (
         (F.broadcast(h) if broadcast_head else h).join(c, cond)
         .select(F.col("h.doc_id").alias("doc_id"),
@@ -757,24 +685,6 @@ def _fast_window_pairs(tokens, fast, head, subst_attr, colloc_attr,
                 .alias("relation"))
         .select("relation", "doc_id", "hp", "cp", "colloc_term")
     )
-
-
-def _ext_con_col(attr: str, label: str, cols: list[str]) -> Column:
-    """Resolve one inter-slot constraint operand (label 1 = the head
-    side ``h``, label 2 = the probe side ``c``) to its layer column —
-    the window-join twin of ``_compile_with_constraints``' capture
-    columns."""
-    from .cql import DEFAULT_LAYERS
-
-    pref = "h" if label == "1" else "c"
-    if attr == "class":
-        return word_class_expr(f"{pref}.term")
-    name = DEFAULT_LAYERS.get(attr, attr)
-    if name not in cols:
-        raise ValueError(
-            f"constraint attribute {attr!r} → column {name!r} not in "
-            f"token table (available: {sorted(cols)})")
-    return F.col(f"{pref}.{name}")
 
 
 def unary_counts(
@@ -792,9 +702,6 @@ def unary_counts(
     matched, relation-ordered. One compiled plan per relation unioned
     before a single count-distinct aggregate (the word-sketch fan-out
     shape without the scoring tail)."""
-    from .cql import compile_cql, parse_cql, strip_constraints
-    from .cql import substitute_at_position
-
     rels = [r for r in catalog.relations
             if r.pattern and r.extra.get("unary")]
     if not rels:
@@ -918,8 +825,6 @@ def _foldable_pattern(items, head_label: str, colloc_label: str):
     a short filler gap or one unlabeled token test, every test on the
     ``word``/``class`` layers — else ``None`` (the caller falls back to
     the per-pattern :func:`plans.cql.compile_cql` chain)."""
-    from .cql import GapItem, TokenItem, effective_test
-
     if (not items or not isinstance(items[0], TokenItem)
             or items[0].label != head_label):
         return None
@@ -950,22 +855,6 @@ def _foldable_pattern(items, head_label: str, colloc_label: str):
     return items[0], mid, tail
 
 
-def _layer_tests_pred(item, term_col: str) -> Column:
-    """The item's tests as ONE predicate over a renamed term column —
-    the :func:`plans.cql._item_predicate` twin for folded projections
-    (same ``_test_col`` literal/regex/negation semantics, ``class``
-    routed through :func:`word_class_expr`)."""
-    from .cql import _test_col, effective_test
-
-    pred = F.lit(True)
-    for t in item.tests:
-        t = effective_test(t)
-        col = (word_class_expr(term_col) if t.attr == "class"
-               else F.col(term_col))
-        pred = pred & _test_col(t, col)
-    return pred
-
-
 def _folded_pattern_counts(tokens: DataFrame, head_term: str,
                            folds: list) -> DataFrame:
     """``(relation, colloc_term, pair_freq)`` for ALL foldable pattern
@@ -981,7 +870,10 @@ def _folded_pattern_counts(tokens: DataFrame, head_term: str,
 
     ``folds``: ``[(rel, (head_item, mid, colloc_item)), …]``.
     """
-    from .cql import GapItem, TokenItem
+    def on(col: str):
+        # every folded test is on the word/class layer (see
+        # _foldable_pattern): resolve it to the renamed term column
+        return layer_resolver(["term"], lambda _layer: col)
 
     # (rel_id, head_item, offset, mid_item | None, colloc_item); the
     # head's EXTRA tests (beyond the exact-term filter) are row-wise
@@ -1020,10 +912,10 @@ def _folded_pattern_counts(tokens: DataFrame, head_term: str,
              .drop(tk["doc_id"]))
         cases = []
         for rel_id, head_item, off, mid_item, colloc in by_off.get(k, []):
-            cond = (_layer_tests_pred(head_item, "h_term")
-                    & _layer_tests_pred(colloc, f"t{off}"))
+            cond = (item_predicate(head_item, on("h_term"))
+                    & item_predicate(colloc, on(f"t{off}")))
             if mid_item is not None:
-                cond = cond & _layer_tests_pred(mid_item, "t1")
+                cond = cond & item_predicate(mid_item, on("t1"))
             cases.append(F.when(cond, F.struct(
                 F.lit(rel_id).alias("relation"),
                 F.col(f"t{off}").alias("colloc_term"))))
@@ -1063,8 +955,6 @@ def word_sketch(
     from pyspark.sql import Window
 
     from ..functions.scoring import logdice_expr, rel_freq_expr
-
-    from .cql import parse_cql
 
     branches = sketch_branches(catalog, head_term)
     pattern_rels = [r for r in catalog.surface() if r.pattern]
@@ -1160,8 +1050,6 @@ def word_sketch(
     # non-foldable pattern relations (longer/reversed/other-layer BCQL)
     # still compile via the CQL positional-join chain, one branch each
     for rel in chain_rels:
-        from .cql import pattern_collocates
-
         b = pattern_collocates(
             tokens, term_stats, rel.pattern, head_term,
             min_logdice=min_logdice, limit=limit_per_relation,

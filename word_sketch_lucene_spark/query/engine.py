@@ -20,14 +20,52 @@ from __future__ import annotations
 
 import json
 from pathlib import Path
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scoring import B, K1, bm25_term_score_expr
-from ..functions.tokenize import doc_lengths, explode_tokens, tokenize_py
+from ..functions.tokenize import explode_tokens, tokenize_py
 from ..index.build import STATS_FILE
-from .wand import BlockCursor, block_max_wand, exact_daat, idf_py, vectorized_topk
+from ..plans.cql import (
+    DEFAULT_LAYERS,
+    AttrTest,
+    SlotConstraint,
+    TokenItem,
+    _steps,
+    compile_cql,
+    effective_test,
+    expand_repetitions,
+    has_alts,
+    has_repetitions,
+    item_predicate,
+    item_tests,
+    layer_column,
+    layer_resolver,
+    parse_cql,
+    parse_relation_query,
+    sentence_spans_containing,
+    spans_group_freq,
+    strip_constraints,
+    strip_containing,
+    strip_within_sentence,
+)
+from .wand import BlockCursor, block_max_wand, exact_daat, idf_py
+
+
+class _Route(NamedTuple):
+    """Where one pattern runs (:meth:`IndexSearcher._route`): ``kind``
+    is ``chain`` (the in-driver span chain), ``compile`` (the
+    distributed compile over ``tokens``, the forward token table) or
+    ``containing``/``not_containing`` (the sentence span filter);
+    ``core`` is the pattern without its clauses."""
+
+    kind: str
+    core: str
+    within_sentence: bool
+    tokens: DataFrame | None = None
+    constraints: tuple[SlotConstraint, ...] = ()
 
 
 def bounded_rows_df(spark: SparkSession, rows, schema: str,
@@ -615,8 +653,6 @@ class IndexSearcher:
         queries; ``plans/concept-sketch-spec.md:60``)."""
         import numpy as np
 
-        from ..plans.cql import DEFAULT_LAYERS, effective_test
-
         out = []
         for st in steps:
             if st.item.alts:
@@ -749,15 +785,6 @@ class IndexSearcher:
         """
         import numpy as np
 
-        from ..plans.cql import (
-            _steps,
-            expand_repetitions,
-            has_repetitions,
-            parse_cql,
-            strip_constraints,
-            strip_within_sentence,
-        )
-
         pattern, ws = strip_within_sentence(pattern)
         within_sentence = within_sentence or ws
         pattern, cons = strip_constraints(pattern)
@@ -768,8 +795,6 @@ class IndexSearcher:
                 "position sets; use pattern_spans_df (routes to the "
                 "forward-store distributed compile)")
         items = parse_cql(pattern)
-        from ..plans.cql import has_alts
-
         if has_alts(items):
             raise NotImplementedError(
                 "cross-attr `|` disjunctions union positions ACROSS "
@@ -885,13 +910,6 @@ class IndexSearcher:
         patterns)."""
         import numpy as np
 
-        from ..plans.cql import (
-            _steps,
-            has_repetitions,
-            parse_cql,
-            strip_within_sentence,
-        )
-
         if isinstance(pattern, str):
             pattern, ws = strip_within_sentence(pattern)
             within_sentence = within_sentence or ws
@@ -951,13 +969,6 @@ class IndexSearcher:
         """
         import numpy as np
 
-        from ..plans.cql import (
-            AttrTest,
-            TokenItem,
-            _steps,
-            parse_relation_query,
-        )
-
         rq = (parse_relation_query(query) if isinstance(query, str)
               else query)
         if rq is None:
@@ -1015,15 +1026,6 @@ class IndexSearcher:
         head == governor token_id)`` — the same join shape as
         ``operators.dependency.relation_query_pairs``, executed against
         the index's own store."""
-        from ..plans.cql import (
-            DEFAULT_LAYERS,
-            AttrTest,
-            TokenItem,
-            _item_predicate,
-            effective_test,
-            parse_relation_query,
-        )
-
         rq = (parse_relation_query(query) if isinstance(query, str)
               else query)
         if rq is None:
@@ -1044,8 +1046,6 @@ class IndexSearcher:
         selective positive test's Σdf; when the combined estimate
         exceeds the budget (or an expansion hit the cap), serve
         distributed."""
-        from ..plans.cql import AttrTest
-
         if rq.source.tests and all(t.negated for t in rq.source.tests):
             # purely-negative source: the in-driver resolver would need
             # the corpus-sized position complement — always distributed
@@ -1078,38 +1078,28 @@ class IndexSearcher:
         dependent's value on that layer (in-plan collocate identity —
         no per-doc forward pulls). Raises when the index has no
         forward store."""
-        from ..plans.cql import (
-            DEFAULT_LAYERS,
-            AttrTest,
-            TokenItem,
-            _item_predicate,
-            effective_test,
-        )
-
-        dep_tests = list(rq.target.tests) + [AttrTest("deprel", rq.deprel)]
-        need = {"sent_no", "token_id", "head"}
-        for t in [*dep_tests, *rq.source.tests]:
-            a = effective_test(t).attr
-            need.add("term" if a == "class" else DEFAULT_LAYERS.get(a, a))
+        dep_item = TokenItem(list(rq.target.tests)
+                             + [AttrTest("deprel", rq.deprel)])
+        need = {"sent_no", "token_id", "head"} | {
+            layer_column(t.attr)
+            for t in item_tests(dep_item) + item_tests(rq.source)}
         if dep_capture:
-            need.add(DEFAULT_LAYERS.get(dep_capture, dep_capture))
+            need.add(layer_column(dep_capture))
         tokens = self.forward_token_table(columns=need)
         if tokens is None or not need <= set(tokens.columns):
             raise NotImplementedError(
                 "distributed relation queries need the forward_layers "
                 "store with structural arrays "
                 "(index.build.build_conllu_index)")
-        cols = tokens.columns
-        gov = tokens.filter(_item_predicate(rq.source, cols)).select(
+        resolve = layer_resolver(tokens.columns)
+        gov = tokens.filter(item_predicate(rq.source, resolve)).select(
             F.col("doc_id").alias("gd"), F.col("sent_no").alias("gs"),
             F.col("token_id").alias("gt"), F.col("pos").alias("gp"))
         dsel = ["doc_id", "sent_no", "head", F.col("pos").alias("dp")]
         if dep_capture:
-            dsel.append(F.col(DEFAULT_LAYERS.get(dep_capture, dep_capture))
-                        .alias("colloc"))
+            dsel.append(resolve(dep_capture).alias("colloc"))
         dep = tokens.filter(
-            (F.col("head") > 0)
-            & _item_predicate(TokenItem(dep_tests), cols)
+            (F.col("head") > 0) & item_predicate(dep_item, resolve)
         ).select(*dsel)
         out_cols = ["doc_id", "gp", "dp"] + (["colloc"] if dep_capture
                                              else [])
@@ -1146,8 +1136,6 @@ class IndexSearcher:
         pattern's uncached tests, memoized per (layer, test), so a
         cold 41-relation fan-out prices in a handful of jobs instead
         of ~2 scheduler round-trips per slot (r4 verdict #5)."""
-        from ..plans.cql import _steps, parse_cql, strip_within_sentence
-
         pattern, _ws = strip_within_sentence(pattern)
         steps = _steps(parse_cql(pattern))
         self._price_tests([t for st in steps for t in st.item.tests])
@@ -1162,8 +1150,6 @@ class IndexSearcher:
         """Fill the (layer, value, literal) → (Σcf, n_values) memo for
         every test in one conditional-aggregate job per dictionary
         table (term_stats; layer_stats once for ALL non-term layers)."""
-        from ..plans.cql import DEFAULT_LAYERS, effective_test
-
         by_src: dict[str, list] = {}
         for t in tests:
             t = effective_test(t)
@@ -1205,8 +1191,6 @@ class IndexSearcher:
         """Σcf + cap flag for one constraint's test list (the per-slot
         kernel of :meth:`pattern_cost`, reused by the relation-query
         router) — served from the pricing memo, filled on demand."""
-        from ..plans.cql import DEFAULT_LAYERS, effective_test
-
         self._price_tests(tests)
         total, capped = 0, False
         for t in tests:
@@ -1229,13 +1213,6 @@ class IndexSearcher:
         by :meth:`pattern_cost` on this path): every positive literal
         surface/lemma test must be under the broadcast cf cap — a
         stopword slot at web scale must shuffle, not broadcast."""
-        from ..plans.cql import (
-            DEFAULT_LAYERS,
-            _steps,
-            effective_test,
-            parse_cql,
-        )
-
         tests = [t for st in _steps(parse_cql(pattern))
                  for t in st.item.tests]
         self._price_tests(tests)
@@ -1257,24 +1234,9 @@ class IndexSearcher:
         tested layer (the pattern then stays on the capped index path,
         documented best-effort like the reference's max term
         expansion)."""
-        from ..plans.cql import (
-            DEFAULT_LAYERS,
-            _steps,
-            effective_test,
-            parse_cql,
-        )
-
-        attrs = set()
-        for st in _steps(parse_cql(pattern)):
-            for t in st.item.tests:
-                attrs.add(effective_test(t).attr)
-            for group in st.item.alts or ():
-                for t in group:
-                    attrs.add(effective_test(t).attr)
-        attrs |= extra_attrs or set()
-        # the virtual `class` attr derives from the surface term column
-        need = {"term" if a == "class" else DEFAULT_LAYERS.get(a, a)
-                for a in attrs}
+        attrs = {t.attr for st in _steps(parse_cql(pattern))
+                 for t in item_tests(st.item)} | (extra_attrs or set())
+        need = {layer_column(a) for a in attrs}
         if within_sentence:
             need.add("sent_no")
         tokens = self.forward_token_table(columns=need)
@@ -1294,99 +1256,106 @@ class IndexSearcher:
         return (self.spark.read.parquet(str(p))
                 .filter(F.expr(doc_filter)).select("doc_id"))
 
-    def pattern_spans_df(self, pattern: str,
-                         max_terms_per_slot: int = 256,
-                         df_budget: int = 500_000,
-                         within_sentence: bool = False,
-                         doc_filter: str | None = None) -> DataFrame:
-        """Pattern spans as a DATAFRAME ``(doc_id, start, end)`` —
-        the plan-shaped twin of :meth:`pattern_hits_auto`. On the
-        distributed route the returned plan never materializes spans on
-        the driver (a hot pattern has O(corpus) matches; consumers push
-        their own window/limit before any collect — see
-        ``query.concordance.index_pattern_concordance``). Under the
-        Σcf budget the in-driver span chain runs and its (bounded)
-        span list is parallelized back — same result shape either way.
+    def _route(self, pattern: str, max_terms_per_slot: int,
+               df_budget: int, within_sentence: bool) -> _Route:
+        """THE pattern router, shared by :meth:`pattern_spans_df` and
+        :meth:`pattern_hits_auto`. In order:
 
-        ``doc_filter`` (SQL predicate over the ``doc_meta`` store)
-        restricts matches to passing documents — semi-joined in-plan on
-        the distributed route, masked driver-side on the bounded
-        in-driver route (BlackLab's metadata-filtered CQL).
+        - ``<s/> [!]containing`` → the sentence span filter;
+        - inter-slot constraints or a cross-attr ``|`` → the
+          distributed compile over the forward token table: they need
+          layer VALUES at two matched positions or a position union
+          ACROSS layers, and the span chain only knows per-layer
+          position sets (it raises, naming ``pattern_spans_df``);
+        - Σcf over ``df_budget`` or an expansion at the term cap →
+          the distributed compile, when the forward store carries
+          every tested layer (else the capped chain, best-effort like
+          the reference's max term expansion);
+        - otherwise the in-driver span chain (:meth:`pattern_hits`).
         """
-        from ..plans.cql import (
-            compile_cql,
-            strip_constraints,
-            strip_containing,
-            strip_within_sentence,
-        )
-
         core, mode = strip_containing(pattern)
         if mode is not None:
-            # span-filter form: sentence spans, same (doc_id, start,
-            # end) shape — KWIC/consumer plumbing works unchanged
-            out = (self.sentence_spans_containing(
-                core, negated=mode == "not_containing")
-                .select("doc_id", "start", "end"))
-            if doc_filter is not None:
-                out = out.join(self._meta_allowed_df(doc_filter),
-                               "doc_id", "left_semi")
-            return out
+            return _Route(mode, core, True)
         pattern, ws = strip_within_sentence(pattern)
-        within_sentence = within_sentence or ws
-        from ..plans.cql import has_alts, parse_cql
-
         core, cons = strip_constraints(pattern)
+        # BlackLab writes constraints LAST (`… within <s/> :: …`)
         core, ws2 = strip_within_sentence(core)
-        within_sentence = within_sentence or ws2
+        within_sentence = within_sentence or ws or ws2
         if cons or has_alts(parse_cql(core)):
-            # inter-slot constraints need layer VALUES at two matched
-            # positions, and cross-attr `|` disjunctions need a
-            # position-set union ACROSS layers — the forward token
-            # table serves both; the positional span chain only knows
-            # per-layer position sets, so these patterns always route
-            # to the distributed compile (the in-driver tier raises,
-            # naming this method)
             tokens = self._pattern_fallback_tokens(
                 core, within_sentence,
                 extra_attrs={a for c in cons
                              for a in (c.attr_a, c.attr_b)})
             if tokens is None:
                 raise NotImplementedError(
-                    "inter-slot constraints need the forward token "
-                    "store carrying every constrained layer — rebuild "
-                    "with store_docstore=True / build_conllu_index, or "
+                    "inter-slot constraints and cross-attr `|` need "
+                    "the forward token store carrying every tested "
+                    "layer — rebuild with store_docstore=True / "
+                    "build_conllu_index, or "
                     "use plans.cql.compile_cql over a token DataFrame")
-            out = (compile_cql(
-                tokens, pattern, keep_terms=False,
-                within_sentence=within_sentence,
-                selective_broadcast=self._selective_broadcast_safe(
-                    core))
-                .select("doc_id", "start", "end"))
-            if doc_filter is not None:
-                out = out.join(self._meta_allowed_df(doc_filter),
-                               "doc_id", "left_semi")
-            return out
-        cost, capped = self.pattern_cost(pattern, max_terms_per_slot)
-        tokens = None
+            return _Route("compile", core, within_sentence, tokens, cons)
+        cost, capped = self.pattern_cost(core, max_terms_per_slot)
         if cost > df_budget or capped:
-            tokens = self._pattern_fallback_tokens(pattern,
-                                                   within_sentence)
-        if tokens is not None:
-            out = (compile_cql(
-                tokens, pattern, keep_terms=False,
-                within_sentence=within_sentence,
+            tokens = self._pattern_fallback_tokens(core, within_sentence)
+            if tokens is not None:
+                return _Route("compile", core, within_sentence, tokens)
+        return _Route("chain", core, within_sentence)
+
+    def _route_spans_df(self, route: _Route,
+                        doc_filter: str | None) -> DataFrame:
+        """The ``(doc_id, start, end)`` plan of a distributed route,
+        ``doc_filter`` semi-joined in-plan."""
+        if route.kind == "compile":
+            out = compile_cql(
+                route.tokens, route.core, keep_terms=False,
+                within_sentence=route.within_sentence,
                 selective_broadcast=self._selective_broadcast_safe(
-                    pattern))
-                .select("doc_id", "start", "end"))
-            if doc_filter is not None:
-                out = out.join(self._meta_allowed_df(doc_filter),
-                               "doc_id", "left_semi")
-            return out
-        spans = self.pattern_hits(pattern, max_terms_per_slot,
-                                  within_sentence=within_sentence)
+                    route.core),
+                constraints=route.constraints)
+        else:
+            out = self.sentence_spans_containing(
+                route.core, negated=route.kind == "not_containing")
+        out = out.select("doc_id", "start", "end")
         if doc_filter is not None:
-            allowed = set(self.filtered_doc_ids(doc_filter).tolist())
-            spans = [s for s in spans if s[0] in allowed]
+            out = out.join(self._meta_allowed_df(doc_filter),
+                           "doc_id", "left_semi")
+        return out
+
+    def _chain_spans(self, route: _Route, max_terms_per_slot: int,
+                     doc_filter: str | None) -> list[tuple[int, int, int]]:
+        """The in-driver span chain of a ``chain`` route, ``doc_filter``
+        masked in the driver."""
+        spans = self.pattern_hits(route.core, max_terms_per_slot,
+                                  within_sentence=route.within_sentence)
+        if doc_filter is None:
+            return spans
+        allowed = set(self.filtered_doc_ids(doc_filter).tolist())
+        return [s for s in spans if s[0] in allowed]
+
+    def pattern_spans_df(self, pattern: str,
+                         max_terms_per_slot: int = 256,
+                         df_budget: int = 500_000,
+                         within_sentence: bool = False,
+                         doc_filter: str | None = None) -> DataFrame:
+        """Pattern spans as a DATAFRAME ``(doc_id, start, end)``, on
+        the route :meth:`_route` picks. A distributed route returns its
+        plan, which never materializes spans on the driver (a hot
+        pattern has O(corpus) matches; consumers push their own
+        window/limit before any collect — see
+        ``query.concordance.index_pattern_concordance``). The in-driver
+        chain route parallelizes its (Σcf-bounded) span list back —
+        same result shape either way.
+
+        ``doc_filter`` (SQL predicate over the ``doc_meta`` store)
+        restricts matches to passing documents — semi-joined in-plan on
+        a distributed route, masked driver-side on the chain route
+        (BlackLab's metadata-filtered CQL).
+        """
+        route = self._route(pattern, max_terms_per_slot, df_budget,
+                            within_sentence)
+        if route.kind != "chain":
+            return self._route_spans_df(route, doc_filter)
+        spans = self._chain_spans(route, max_terms_per_slot, doc_filter)
         return bounded_rows_df(
             self.spark, [(int(d), int(s), int(e)) for d, s, e in spans],
             "doc_id long, start long, end long",
@@ -1400,8 +1369,6 @@ class IndexSearcher:
         hit text gathered from the forward store's token table, grouped
         and ranked by the shared kernel — the whole trace is a plan;
         only the top-k rows ever reach the driver."""
-        from ..plans.cql import spans_group_freq
-
         tokens = self.forward_token_table(columns={layer_col})
         if tokens is None or layer_col not in tokens.columns:
             raise NotImplementedError(
@@ -1481,8 +1448,6 @@ class IndexSearcher:
         this index's forward-layer store. Always a DataFrame plan
         (``!containing`` enumerates the corpus's sentence complement,
         O(corpus) rows — never a driver list)."""
-        from ..plans.cql import sentence_spans_containing, strip_containing
-
         core, mode = strip_containing(pattern)
         if mode is not None:
             negated = negated or mode == "not_containing"
@@ -1503,80 +1468,28 @@ class IndexSearcher:
                           within_sentence: bool = False,
                           doc_filter: str | None = None
                           ) -> list[tuple[int, int, int]]:
-        """:meth:`pattern_hits` with the hot-pattern guard: a
-        vocabulary-wide slot (e.g. ``[word="[a-z0-9]+"]``) would pull a
-        vocabulary-scale postings union driver-side, so when the Σcf
-        estimate exceeds ``df_budget`` (or an expansion hit the term
-        cap, which would silently truncate matches) the pattern runs as
-        a distributed DataFrame plan over the forward token table
-        instead — same spans, executor-side work, LAYER-complete: every
-        attribute with a stored forward layer (term/lemma/upos/xpos/
-        deprel + case variants) routes through the same fallback.
+        """Pattern spans as a sorted LIST ``[(doc_id, start, end)]``, on
+        the route :meth:`_route` picks — the same decision as
+        :meth:`pattern_spans_df`. The chain route returns
+        :meth:`pattern_hits` directly (``doc_filter`` masked in the
+        driver, no DataFrame round trip). Every distributed route —
+        ``containing``, constraints or cross-attr ``|``, Σcf over
+        ``df_budget`` or an expansion at the term cap — collects its
+        plan through one Arrow batch (``toPandas``, ~5× cheaper than
+        row-at-a-time ``collect`` at 10⁵⁺ spans), ``doc_filter``
+        semi-joined in-plan.
 
-        NOTE the return type is a fully materialized span LIST — right
-        for the in-driver path (bounded by the Σcf budget) and for
-        tests; a routed-hot pattern's spans are O(corpus), so
-        plan-shaped consumers (KWIC pages, collocate counting) should
-        use :meth:`pattern_spans_df` and push their window/limit into
-        the plan instead of collecting everything here. The transfer
-        uses one Arrow batch exchange (``toPandas``), not row-at-a-time
-        ``collect`` — ~5× cheaper at 10⁵⁺ spans.
-
-        ``doc_filter`` restricts matches to documents passing a
-        metadata predicate (delegates to :meth:`pattern_spans_df`,
-        which applies it on whichever route runs)."""
-        from ..plans.cql import (
-            compile_cql,
-            strip_containing,
-            strip_within_sentence,
-        )
-
-        if doc_filter is not None:
-            pdf = (self.pattern_spans_df(
-                pattern, max_terms_per_slot, df_budget,
-                within_sentence, doc_filter=doc_filter)
-                .orderBy("doc_id", "start", "end").toPandas())
-            return list(zip(pdf["doc_id"].astype(int).tolist(),
-                            pdf["start"].astype(int).tolist(),
-                            pdf["end"].astype(int).tolist()))
-        core, mode = strip_containing(pattern)
-        if mode is not None:
-            pdf = (self.sentence_spans_containing(
-                core, negated=mode == "not_containing")
-                .select("doc_id", "start", "end")
-                .orderBy("doc_id", "start", "end").toPandas())
-            return list(zip(pdf["doc_id"].astype(int).tolist(),
-                            pdf["start"].astype(int).tolist(),
-                            pdf["end"].astype(int).tolist()))
-        pattern, ws = strip_within_sentence(pattern)
-        within_sentence = within_sentence or ws
-        from ..plans.cql import has_alts, parse_cql, strip_constraints
-
-        _core, _cons = strip_constraints(pattern)
-        _core, _ws2 = strip_within_sentence(_core)
-        if _cons or has_alts(parse_cql(_core)):
-            # constrained/disjunctive patterns only run on the
-            # distributed compile
-            pdf = (self.pattern_spans_df(
-                pattern, max_terms_per_slot, df_budget, within_sentence)
-                .orderBy("doc_id", "start", "end").toPandas())
-            return list(zip(pdf["doc_id"].astype(int).tolist(),
-                            pdf["start"].astype(int).tolist(),
-                            pdf["end"].astype(int).tolist()))
-        cost, capped = self.pattern_cost(pattern, max_terms_per_slot)
-        if cost <= df_budget and not capped:
-            return self.pattern_hits(pattern, max_terms_per_slot,
-                                     within_sentence=within_sentence)
-        tokens = self._pattern_fallback_tokens(pattern, within_sentence)
-        if tokens is None:
-            return self.pattern_hits(pattern, max_terms_per_slot,
-                                     within_sentence=within_sentence)
-        pdf = (compile_cql(
-            tokens, pattern, keep_terms=False,
-            within_sentence=within_sentence,
-            selective_broadcast=self._selective_broadcast_safe(pattern))
-            .select("doc_id", "start", "end")
-            .orderBy("doc_id", "start", "end").toPandas())
+        NOTE a routed-hot pattern's spans are O(corpus): plan-shaped
+        consumers (KWIC pages, collocate counting) should use
+        :meth:`pattern_spans_df` and push their window/limit into the
+        plan instead of collecting everything here."""
+        route = self._route(pattern, max_terms_per_slot, df_budget,
+                            within_sentence)
+        if route.kind == "chain":
+            return self._chain_spans(route, max_terms_per_slot,
+                                     doc_filter)
+        pdf = (self._route_spans_df(route, doc_filter)
+               .orderBy("doc_id", "start", "end").toPandas())
         return list(zip(pdf["doc_id"].astype(int).tolist(),
                         pdf["start"].astype(int).tolist(),
                         pdf["end"].astype(int).tolist()))

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import math
 from collections import Counter
+from decimal import ROUND_HALF_UP, Decimal
 
 from ..plans.cql import (
     DEFAULT_LAYERS,
@@ -38,7 +39,13 @@ def _logdice(fab: float, fa: float, fb: float) -> float:
 
 
 def _round(x: float, dp: int | None) -> float:
-    return x if dp is None else round(x, dp)
+    """Spark's ``F.round``: half-UP on the decimal value, where
+    Python's ``round`` breaks an exact tie to even (``1/32`` at 4 dp:
+    0.0313, not 0.0312)."""
+    if dp is None or not math.isfinite(x):
+        return x
+    return float(Decimal(repr(float(x))).quantize(
+        Decimal(1).scaleb(-dp), rounding=ROUND_HALF_UP))
 
 
 def relation_collocates(
